@@ -19,6 +19,7 @@ import glob
 import hashlib
 import json
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -27,6 +28,8 @@ WORKLOADS = ("lifecycle_dense", "query_suite")
 RESULT_TAG = "PERFBENCH_RESULT "
 DETAIL_TAG = "PERFBENCH_DETAIL "
 JVM_TIMEOUT_S = 165
+# fixed (-Xms = -Xmx): a growing heap doubled the run-to-run spread of query times
+HEAP = "4g"
 ADD_OPENS = [
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
     "java.nio", "java.util", "java.util.concurrent", "java.util.concurrent.atomic",
@@ -39,12 +42,25 @@ def fail(msg):
     sys.exit(2)
 
 
-def spark_jars():
-    home = os.environ.get("SPARK_HOME", "/opt/spark")
-    jars = sorted(glob.glob(os.path.join(home, "jars", "*.jar")))
-    if not jars:
-        fail(f"no Spark jars under {home}/jars")
-    return jars
+def spark_jars(root):
+    """Spark's jars: under $SPARK_HOME, else next to spark-submit on PATH,
+    else in the `unmanagedBase` directory that build.sbt compiles against."""
+    dirs = []
+    if os.environ.get("SPARK_HOME"):
+        dirs.append(os.path.join(os.environ["SPARK_HOME"], "jars"))
+    submit = shutil.which("spark-submit")
+    if submit:
+        dirs.append(os.path.join(os.path.dirname(os.path.dirname(os.path.realpath(submit))), "jars"))
+    sbt = os.path.join(root, "build.sbt")
+    if os.path.exists(sbt):
+        m = re.search(r'unmanagedBase\s*:=\s*file\("([^"]+)"\)', open(sbt).read())
+        if m:
+            dirs.append(m.group(1))
+    for d in dirs:
+        jars = sorted(glob.glob(os.path.join(d, "*.jar")))
+        if jars:
+            return jars
+    fail(f"no Spark jars found (looked in {dirs})")
 
 
 def sources(root, sub):
@@ -108,14 +124,13 @@ def main():
     if not os.path.isdir(os.path.join(root, "src", "main", "scala")):
         fail("run from the repository root: src/main/scala not found")
     build_dir = os.path.join(root, os.environ.get("CARGO_TARGET_DIR", ".bench_build"))
-    jars = spark_jars()
+    jars = spark_jars(root)
     main_out, bench_out = build(root, build_dir, jars)
 
     work = os.path.join(build_dir, "work", f"{args.workload}-{args.seed}-{os.getpid()}")
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    heap = os.environ.get("PERFBENCH_HEAP", "4g")
-    cmd = (["java", f"-Xms{heap}", f"-Xmx{heap}", "-XX:-UsePerfData", f"-Djava.io.tmpdir={tmp}",
+    cmd = (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:-UsePerfData", f"-Djava.io.tmpdir={tmp}",
             "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
            + [a for p in ADD_OPENS for a in ("--add-opens", f"java.base/{p}=ALL-UNNAMED")]
            + ["-cp", os.pathsep.join([bench_out, main_out] + jars),
@@ -127,7 +142,7 @@ def main():
               "--corrupt", "1" if args.corrupt else "0",
               "--record-hashes", "1" if args.record_hashes else "0"])
     env = dict(os.environ, SPARK_LOCAL_DIRS=tmp)
-    env.pop("SPARK_CONF_DIR", None)
+    env.pop("SPARK_CONF_DIR", None)  # no site configuration from outside the checkout
     logs = os.path.join(build_dir, "logs")
     os.makedirs(logs, exist_ok=True)
     log = os.path.join(logs, f"{args.workload}-{args.seed}-trace{args.trace}.log")
